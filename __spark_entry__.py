@@ -679,20 +679,40 @@ def _warehouse_path(spark, sf, name):
     return os.path.join(os.path.dirname(os.path.abspath(__file__)), "spark-warehouse", f"{name}_{tag}")
 
 
-def _table_stale(spark, path, expected_rows, expect_types=()):
-    """True when a precomputed table at ``path`` is absent, its row
-    count drifted from the source fixture, or a column's dtype is not
-    the expected one (ingest-once semantics: the build is skipped on
-    every later call of the same round)."""
+def _ensure_index(path, source, params, build) -> bool:
+    """The one freshness law for every persisted index: the index at
+    ``path`` is served only when its sidecar ``<path>/_gate.json``
+    matches the source's row count, the (path, length, modification
+    time) of every file the source reads (Hadoop FileStatus — metadata
+    only, no data read) and ``repr(params)``. Otherwise the sidecar is
+    deleted, ``build()`` runs and the sidecar is committed atomically
+    after it, so a crashed build always rebuilds on the next call. A
+    hit costs one job, the source count. Returns whether it built."""
+    import json
+    import os
+
+    spark = source.sparkSession
+    conf = spark._jsc.hadoopConfiguration()
+    files = []
+    for f in sorted(source.inputFiles()):
+        hp = spark._jvm.org.apache.hadoop.fs.Path(f)
+        st = hp.getFileSystem(conf).getFileStatus(hp)
+        files.append([f, st.getLen(), st.getModificationTime()])
+    gate = {"rows": source.count(), "files": files, "params": repr(params)}
+    gate_p = os.path.join(path, "_gate.json")
     try:
-        df = spark.read.parquet(path)
-        dtypes = dict(df.dtypes)
-        for col, typ in expect_types:
-            if dtypes.get(col) != typ:
-                return True
-        return df.count() != expected_rows
-    except Exception:
-        return True
+        with open(gate_p) as fh:
+            if json.load(fh) == gate:
+                return False
+    except (OSError, ValueError):
+        pass
+    if os.path.exists(gate_p):
+        os.remove(gate_p)
+    build()
+    with open(f"{gate_p}.tmp", "w") as fh:
+        json.dump(gate, fh)
+    os.replace(f"{gate_p}.tmp", gate_p)
+    return True
 
 
 def _q_sim_topk_lsh_precomputed(spark, sf):
@@ -705,8 +725,9 @@ def _q_sim_topk_lsh_precomputed(spark, sf):
     emb = load_table(spark, sf, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     path = _warehouse_path(spark, sf, "lsh_signatures")
-    if _table_stale(spark, path, emb.count(), expect_types=[("_sig", "string")]):
-        S.build_lsh_signature_table(emb, "embedding", 64, path, n_planes=6, seed=42)
+    _ensure_index(path, emb, (64, 6, 42), lambda: S.build_lsh_signature_table(
+        emb, "embedding", 64, path, n_planes=6, seed=42
+    ))
     return S.lsh_topk_precomputed(
         spark, path, "embedding", qvec, k=10, n_planes=6, seed=42
     ).withColumn("similarity", F.round("similarity", 4))
@@ -719,8 +740,9 @@ def _q_sim_topk_ivf_precomputed(spark, sf):
     emb = load_table(spark, sf, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     path = _warehouse_path(spark, sf, "ivf_lists")
-    if _table_stale(spark, path, emb.count()):
-        S.build_ivf_table(emb, "embedding", 64, path, n_centroids=8, seed=7)
+    _ensure_index(path, emb, (64, 8, 7), lambda: S.build_ivf_table(
+        emb, "embedding", 64, path, n_centroids=8, seed=7
+    ))
     return S.ivf_topk_precomputed(
         spark, path, "embedding", qvec, k=10, n_centroids=8, n_probe=2, seed=7
     ).withColumn("similarity", F.round("similarity", 4))
@@ -4621,25 +4643,23 @@ def _q_ivfpq_adc_topk(spark, sf):
     candidate."""
     from data_pengadaan_agent_spark.operators import pq as PQ
 
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    path = _warehouse_path(spark, sf, "ivfpq_codes")
-    expected = emb.count()
-    try:
-        coarse, cb = PQ.load_ivfpq_codebooks(spark, path)
-        fresh = (
-            len(coarse) == 4
-            and len(cb) == 4
-            and len(cb[0]) == 4
-            and spark.read.parquet(path).count() == expected
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        coarse, cb = PQ.build_ivfpq_table(
-            emb, path, dim=64, kc=4, m=4, ksub=4, iters=2
-        )
+    emb, path, coarse, cb = _ivfpq_index(spark, sf)
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     return PQ.ivfpq_adc_topk(spark, path, coarse, cb, qvec, k=10, n_probe=2)
+
+
+def _ivfpq_index(spark, sf):
+    """Shared ingest-once IVF-PQ codes (kc=4 coarse lists, m=4 × ksub=4
+    residual PQ) behind ivfpq_adc_topk and ivfpq_adc_batch, with the
+    frozen codebooks the query scores against."""
+    from data_pengadaan_agent_spark.operators import pq as PQ
+
+    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
+    path = _warehouse_path(spark, sf, "ivfpq_codes")
+    _ensure_index(path, emb, (64, 4, 4, 4, 2), lambda: PQ.build_ivfpq_table(
+        emb, path, dim=64, kc=4, m=4, ksub=4, iters=2
+    ))
+    return (emb, path, *PQ.load_ivfpq_codebooks(spark, path))
 
 
 def _ivfpq_adc_sql(
@@ -4735,23 +4755,7 @@ def _q_ivfpq_adc_batch(spark, sf):
     candidate."""
     from data_pengadaan_agent_spark.operators import pq as PQ
 
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    path = _warehouse_path(spark, sf, "ivfpq_codes")
-    expected = emb.count()
-    try:
-        coarse, cb = PQ.load_ivfpq_codebooks(spark, path)
-        fresh = (
-            len(coarse) == 4
-            and len(cb) == 4
-            and len(cb[0]) == 4
-            and spark.read.parquet(path).count() == expected
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        coarse, cb = PQ.build_ivfpq_table(
-            emb, path, dim=64, kc=4, m=4, ksub=4, iters=2
-        )
+    emb, path, coarse, cb = _ivfpq_index(spark, sf)
     queries = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in emb.filter(F.col("vec_id") % 200 == 0).collect()
@@ -5486,18 +5490,18 @@ def _q_ann_ingest_stream_codes(spark, sf):
     ack = _warehouse_path(spark, sf, "stream_ivfpq_ack")
     shutil.rmtree(ack, ignore_errors=True)
     PQ.build_ivfpq_table(base, idx, dim=64, kc=4, m=4, ksub=4, iters=2)
-    srcdir = tempfile.mkdtemp(prefix="ann_ingest_src_")
-    rest.coalesce(1).write.mode("overwrite").parquet(srcdir)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .format("parquet")
-        .load(srcdir)
-    )
-    q = SW.foreach_batch_ivfpq_sink(
-        stream, idx, ack, tempfile.mkdtemp(prefix="ann_ingest_ckpt_")
-    )
-    q.processAllAvailable()
-    q.stop()
+    # the staged source and the checkpoint go with the directory; the
+    # returned frame reads the warehouse index only
+    with tempfile.TemporaryDirectory(prefix="ann_ingest_") as tmp:
+        rest.coalesce(1).write.parquet(f"{tmp}/src")
+        stream = (
+            spark.readStream.schema("vec_id long, embedding array<float>")
+            .format("parquet")
+            .load(f"{tmp}/src")
+        )
+        q = SW.foreach_batch_ivfpq_sink(stream, idx, ack, f"{tmp}/ckpt")
+        q.processAllAvailable()
+        q.stop()
     codes = spark.read.parquet(idx)
     return codes.select(
         "vec_id",
@@ -5720,12 +5724,12 @@ def _q_corpus_ingest_stream_dup_spans(spark, sf):
         n_buckets=64,
         arith_hash=False,
     )
-    q = SW.foreach_batch_dup_span_sink(
-        corpus, idx, sink, tempfile.mkdtemp(prefix="dup_span_ckpt_"),
-        max_ppm=500_000,
-    )
-    q.processAllAvailable()
-    q.stop()
+    with tempfile.TemporaryDirectory(prefix="dup_span_ckpt_") as ckpt:
+        q = SW.foreach_batch_dup_span_sink(
+            corpus, idx, sink, ckpt, max_ppm=500_000
+        )
+        q.processAllAvailable()
+        q.stop()
     return spark.read.parquet(sink).select(
         "text", "n_tokens", "dup_tokens", "dup_ppm", "keep"
     )
@@ -5894,25 +5898,16 @@ def _q_bm25_index_retrieval(spark, sf):
 
     docs = load_table(spark, sf, "documents")
     path = _warehouse_path(spark, sf, "postings_index")
-    # gate law (r15, the bloom n_keys shape): the meta stats marker's
-    # n_docs vs the source row count — ONE 1-row read replaces the
-    # per-call doclen parquet count (meta n_docs == doclen count at
-    # every committed state by maintenance; a crashed append leaves
-    # them mismatched against the source and rebuilds here)
-    try:
-        meta = LX.read_meta_stats(spark, path)
-        fresh = meta[1] == docs.count() and meta[0] == 64
-    except Exception:
-        fresh = False
-    if not fresh:
-        LX.build_postings_index(docs, path, n_buckets=64)
-        meta = LX.read_meta_stats(spark, path)
+    _ensure_index(path, docs, 64, lambda: LX.build_postings_index(
+        docs, path, n_buckets=64
+    ))
     queries = docs.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("qid"),
         F.slice(X.tokens("text"), 1, 3).alias("terms"),
     )
-    # the gate just validated (or the build just wrote) the meta —
-    # forward it instead of re-reading the sidecar (r14)
+    # the corpus stats (N, Σdl) come from the 1-row meta, read once here
+    # and forwarded instead of re-read inside the query (r14)
+    meta = LX.read_meta_stats(spark, path)
     return LX.bm25_from_index(spark, path, queries, k=5, _meta=meta)
 
 
@@ -5924,8 +5919,9 @@ def _q_dup_spans_incremental(spark, sf):
     base twin at SHIFTED positions, the winnow_matches twin
     construction. The query answers "which spans of the daily shard
     duplicate anything seen so far" WITHOUT re-tokenizing the base;
-    ingest is once-per-round (registry count gates the rebuild;
-    append replay is a registered no-op). ROUND-11-pool candidate."""
+    ingest is once per source state (_ensure_index rebuilds when
+    documents change; append replay is a registered no-op).
+    ROUND-11-pool candidate."""
     from data_pengadaan_agent_spark.operators import dupindex as DI
 
     docs = load_table(spark, sf, "documents")
@@ -5934,17 +5930,13 @@ def _q_dup_spans_incremental(spark, sf):
         F.concat(F.lit("pre1 pre2 "), F.col("text")).alias("text"),
     )
     path = _warehouse_path(spark, sf, "gram_counts")
-    expected = docs.count() + shard.count()
-    try:
-        fresh = (
-            spark.read.parquet(f"{path}/docs").count() == expected
-            and DI._read_meta(spark, path) == (8, 64, True)
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
+
+    def build():
         DI.build_gram_counts(docs, path, length=8, n_buckets=64)
         DI.append_gram_counts(shard, path)
+
+    # the shard is a fixed function of docs, so docs is the whole source
+    rebuilt = _ensure_index(path, docs, (8, 64, True), build)
     # Bucketed counts promoted to the default (r15, VERDICT r14 ask
     # #5; guide §2.4 / §6): the counts table re-laid-out as a managed
     # table bucketed on h removes the count side's per-query exchange
@@ -5964,7 +5956,7 @@ def _q_dup_spans_incremental(spark, sf):
 
     tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
     tbl = f"gram_counts_bucketed_{tag}"
-    if (not fresh) or (not spark.catalog.tableExists(tbl)):
+    if rebuilt or not spark.catalog.tableExists(tbl):
         env_buckets = _os.environ.get("SPARK_GRAFT_COUNT_BUCKETS")
         if env_buckets:
             n_buckets = int(env_buckets)
@@ -5983,8 +5975,8 @@ def _q_dup_spans_incremental(spark, sf):
             "h",
             n_buckets=n_buckets,
         )
-    # the gram law (8, 64, True) was just validated (or built) by the
-    # freshness gate — forward it instead of re-reading the meta (r14)
+    # the gram law (8, 64, True) is pinned by the gate's params —
+    # forward it instead of re-reading the meta (r14)
     return DI.dup_spans_incremental(
         spark, path, shard, _meta=(8, 64, True), counts_source=spark.table(tbl)
     )
@@ -6043,21 +6035,14 @@ FROM agg
 
 
 def _trgm_index_path(spark, sf):
-    """Shared ingest-once trigram index over documents (registry count
-    gates the rebuild, like the postings/gram-count indexes)."""
+    """Shared ingest-once trigram index over documents."""
     from data_pengadaan_agent_spark.operators import trgm as TG
 
     docs = load_table(spark, sf, "documents")
     path = _warehouse_path(spark, sf, "trgm_index")
-    try:
-        fresh = (
-            spark.read.parquet(f"{path}/docs").count() == docs.count()
-            and TG._read_meta(spark, path) == 64
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        TG.build_trgm_index(docs, path, n_buckets=64)
+    _ensure_index(path, docs, 64, lambda: TG.build_trgm_index(
+        docs, path, n_buckets=64
+    ))
     return path, docs
 
 
@@ -6073,8 +6058,8 @@ def _q_trgm_search(spark, sf):
     from data_pengadaan_agent_spark.operators import trgm as TG
 
     path, docs = _trgm_index_path(spark, sf)
-    # n_buckets=64 was just validated (or built) by the freshness
-    # gate — forward it instead of re-reading the meta sidecar (r14)
+    # n_buckets=64 is pinned by the gate's params — forward it
+    # instead of re-reading the meta sidecar (r14)
     return TG.substring_search(
         spark, path, docs, ["window window", "scan merge part"], _n_buckets=64
     )
@@ -6279,22 +6264,11 @@ def _q_hist_quantiles(spark, sf):
 
     ev = load_table(spark, sf, "events")
     path = _warehouse_path(spark, sf, "hist_cube")
-    expected = ev.filter(F.col("value").isNotNull()).count()
-    try:
-        fresh = (
-            HC._read_meta(spark, path) == (["event_type"], "value", 0.0, 500.0, 50)
-            and spark.read.parquet(f"{path}/cube")
-            .agg(F.sum("cnt"))
-            .collect()[0][0]
-            == expected
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        HC.build_hist_cube(
-            ev, path, dims=["event_type"], value_col="value",
-            lo=0.0, hi=500.0, n_bins=50,
-        )
+    params = (["event_type"], "value", 0.0, 500.0, 50)
+    _ensure_index(path, ev, params, lambda: HC.build_hist_cube(
+        ev, path, dims=["event_type"], value_col="value",
+        lo=0.0, hi=500.0, n_bins=50,
+    ))
     return HC.hist_quantile_bins(
         spark, path, ["event_type"], [500_000, 990_000]
     )
@@ -6535,18 +6509,16 @@ def _q_trgm_ingest_stream(spark, sf):
     ack = _warehouse_path(spark, sf, "stream_trgm_ack")
     shutil.rmtree(ack, ignore_errors=True)
     TG.build_trgm_index(base, idx, n_buckets=64)
-    srcdir = tempfile.mkdtemp(prefix="trgm_ingest_src_")
-    rest.coalesce(1).write.mode("overwrite").parquet(srcdir)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .format("parquet")
-        .load(srcdir)
-    )
-    q = SW.foreach_batch_trgm_sink(
-        stream, idx, ack, tempfile.mkdtemp(prefix="trgm_ingest_ckpt_")
-    )
-    q.processAllAvailable()
-    q.stop()
+    with tempfile.TemporaryDirectory(prefix="trgm_ingest_") as tmp:
+        rest.coalesce(1).write.parquet(f"{tmp}/src")
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .format("parquet")
+            .load(f"{tmp}/src")
+        )
+        q = SW.foreach_batch_trgm_sink(stream, idx, ack, f"{tmp}/ckpt")
+        q.processAllAvailable()
+        q.stop()
     return TG.substring_search(spark, idx, docs, ["window window"])
 
 
@@ -6582,18 +6554,16 @@ def _q_hist_cube_stream(spark, sf):
         base, path, dims=["event_type"], value_col="value",
         lo=0.0, hi=500.0, n_bins=50,
     )
-    srcdir = tempfile.mkdtemp(prefix="histcube_src_")
-    rest.coalesce(1).write.mode("overwrite").parquet(srcdir)
-    stream = (
-        spark.readStream.schema("event_id long, event_type string, value double")
-        .format("parquet")
-        .load(srcdir)
-    )
-    q = SW.foreach_batch_hist_cube_sink(
-        stream, path, tempfile.mkdtemp(prefix="histcube_ckpt_")
-    )
-    q.processAllAvailable()
-    q.stop()
+    with tempfile.TemporaryDirectory(prefix="histcube_") as tmp:
+        rest.coalesce(1).write.parquet(f"{tmp}/src")
+        stream = (
+            spark.readStream.schema("event_id long, event_type string, value double")
+            .format("parquet")
+            .load(f"{tmp}/src")
+        )
+        q = SW.foreach_batch_hist_cube_sink(stream, path, f"{tmp}/ckpt")
+        q.processAllAvailable()
+        q.stop()
     return HC.hist_rollup(spark, path, ["event_type"])
 
 
@@ -6619,42 +6589,15 @@ def _bloom_index_path(spark, sf):
     from data_pengadaan_agent_spark.operators import bloom as BL
     from data_pengadaan_agent_spark.operators import textan as X
 
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     docs = load_table(spark, sf, "documents")
     path = _warehouse_path(spark, sf, "bloom_index")
-    # r15 (VERDICT r14 ask #8): the old gate re-fingerprinted and
-    # distinct-counted the WHOLE 80% corpus slice on EVERY call (a
-    # full text scan + shuffle, ~45% extra scan work per probe) and
-    # then distinct-counted keys/ too. The gate law is now the same
-    # one the trgm/postings/gram-count gates already use — source ROW
-    # count (a metadata-only parquet count) against a 1-row sidecar
-    # this entry writes after a successful build — plus the meta
-    # commit-marker read, whose validated 4-tuple forwards into the
-    # probe call. (The bloom meta additionally carries the n_keys
-    # count marker, maintained by build/ingest/compact, so any
-    # gate that does want the registered-key cardinality gets it for
-    # free with the meta read instead of a keys/ distinct-count.)
-    # Sidecar written AFTER the build: a crash between the two leaves
-    # the gate stale and the next call rebuilds — never a fresh-
-    # looking half-built index.
+    # the geometry+key tuple is pinned by the gate's params and forwarded
+    # into the probe instead of re-reading the meta
     meta = (8, 4096, 7, "fingerprint")
-    n_docs = docs.count()
-    gate_p = f"{path}/entry_gate"
-    try:
-        fresh = [
-            r["n_source_rows"] for r in spark.read.parquet(gate_p).collect()
-        ] == [n_docs] and BL.read_meta_counts(spark, path)[0] == meta
-    except Exception:
-        fresh = False
-    if not fresh:
-        corpus = X.fingerprint_arith(docs.filter(F.col("doc_id") % 10 < 8))
-        BL.build_bloom_index(
-            corpus, path, key_col="fingerprint", n_buckets=8, n_words=4096, k=7
-        )
-        local_df(spark, [(int(n_docs),)], "n_source_rows bigint").write.mode(
-            "overwrite"
-        ).parquet(gate_p)
+    _ensure_index(path, docs, meta, lambda: BL.build_bloom_index(
+        X.fingerprint_arith(docs.filter(F.col("doc_id") % 10 < 8)),
+        path, key_col="fingerprint", n_buckets=8, n_words=4096, k=7,
+    ))
     return path, docs, meta
 
 
@@ -6949,12 +6892,10 @@ def _q_cms_freq(spark, sf):
         "lang", F.explode(X.tokens("text")).alias("tok")
     ).filter(F.col("tok") != "")
     path = _warehouse_path(spark, sf, "cms_cube")
-    try:
-        fresh = CM._read_meta(spark, path) == (["lang"], "tok", 4, 512, 424242)
-    except Exception:
-        fresh = False
-    if not fresh:
-        CM.build_cms_cube(toks, path, dims=["lang"], key_col="tok", d=4, w=512)
+    # docs, not the exploded toks: the count stays a metadata read
+    _ensure_index(path, docs, (["lang"], "tok", 4, 512), lambda: CM.build_cms_cube(
+        toks, path, dims=["lang"], key_col="tok", d=4, w=512
+    ))
     return CM.cms_estimate(spark, path, _CMS_KEYS, ["lang"])
 
 
@@ -7119,20 +7060,15 @@ def _zonemap_table_path(spark, sf):
     orders = load_table(spark, sf, "orders")
     data_p = _warehouse_path(spark, sf, "orders_ranged")
     zm_p = _warehouse_path(spark, sf, "orders_zonemap")
-    n = orders.count()
-    try:
-        fresh = (
-            spark.read.parquet(data_p).count() == n
-            and ZM._read_meta(spark, zm_p) == ["o_totalprice"]
-            and ZM.audit_zonemap(spark, data_p, zm_p).count() == 0
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
+
+    def build():
         orders.repartitionByRange(16, "o_totalprice").write.mode(
             "overwrite"
         ).parquet(data_p)
         ZM.build_zonemap(spark, data_p, zm_p, ["o_totalprice"])
+
+    # the pruned scan itself refuses a map that no longer matches the data
+    _ensure_index(data_p, orders, (16, ["o_totalprice"]), build)
     return data_p, zm_p
 
 
@@ -7257,20 +7193,22 @@ def _q_kmv_distinct(spark, sf):
     estimator — in DuckDB. ROUND-13-pool candidate."""
     from data_pengadaan_agent_spark.operators import kmv as KV
 
+    return KV.kmv_distinct(
+        spark, _kmv_cube_path(spark, sf), ["l_returnflag", "l_linestatus"]
+    )
+
+
+def _kmv_cube_path(spark, sf):
+    """Shared ingest-once KMV cube behind kmv_distinct and kmv_overlap."""
+    from data_pengadaan_agent_spark.operators import kmv as KV
+
     li = load_table(spark, sf, "lineitem")
     path = _warehouse_path(spark, sf, "kmv_cube")
-    try:
-        fresh = KV._read_meta(spark, path) == (
-            ["l_returnflag", "l_linestatus"], "l_partkey", 64,
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        KV.build_kmv_cube(
-            li, path, dims=["l_returnflag", "l_linestatus"],
-            key_col="l_partkey", k=64,
-        )
-    return KV.kmv_distinct(spark, path, ["l_returnflag", "l_linestatus"])
+    dims = ["l_returnflag", "l_linestatus"]
+    _ensure_index(path, li, (dims, "l_partkey", 64), lambda: KV.build_kmv_cube(
+        li, path, dims=dims, key_col="l_partkey", k=64
+    ))
+    return path
 
 
 _KMV_DISTINCT_SQL = """
@@ -7311,9 +7249,7 @@ def _q_kmv_overlap(spark, sf):
     integer estimators. ROUND-13-pool candidate."""
     from data_pengadaan_agent_spark.operators import kmv as KV
 
-    path, _ = _warehouse_path(spark, sf, "kmv_cube"), None
-    _q_kmv_distinct(spark, sf)  # ensures the cube is built/fresh
-    return KV.kmv_overlap(spark, path, "l_returnflag", "A", "N")
+    return KV.kmv_overlap(spark, _kmv_cube_path(spark, sf), "l_returnflag", "A", "N")
 
 
 _KMV_OVERLAP_SQL = """
@@ -7444,26 +7380,10 @@ def _q_valueset_scan(spark, sf):
 
     data_p, _ = _zonemap_table_path(spark, sf)
     vs_p = _warehouse_path(spark, sf, "orders_valueset")
-    try:
-        fresh = (
-            ZM._vs_read_meta(spark, vs_p) == "o_orderstatus"
-            and not [
-                f
-                for f in ZM._data_files(data_p)
-                if f
-                not in {
-                    r.file
-                    for r in spark.read.parquet(f"{vs_p}/values")
-                    .select("file")
-                    .distinct()
-                    .collect()
-                }
-            ]
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
+    # the source is the clustered copy: its rewrite changes every file
+    _ensure_index(vs_p, spark.read.parquet(data_p), "o_orderstatus", lambda: (
         ZM.build_valueset_index(spark, data_p, vs_p, "o_orderstatus")
+    ))
     out = ZM.valueset_pruned_scan(spark, data_p, vs_p, ["P"])
     return (
         out.select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -7498,18 +7418,13 @@ def _q_zorder_zonemap_scan(spark, sf):
     li = load_table(spark, sf, "lineitem")
     data_p = _warehouse_path(spark, sf, "lineitem_zordered")
     zm_p = _warehouse_path(spark, sf, "lineitem_zm2d")
-    n = li.count()
-    try:
-        fresh = (
-            spark.read.parquet(data_p).count() == n
-            and ZM._read_meta(spark, zm_p) == ["l_partkey", "l_suppkey"]
-            and ZM.audit_zonemap(spark, data_p, zm_p).count() == 0
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        LY.write_zordered(li, data_p, ["l_partkey", "l_suppkey"], n_files=16)
-        ZM.build_zonemap(spark, data_p, zm_p, ["l_partkey", "l_suppkey"])
+    cols = ["l_partkey", "l_suppkey"]
+
+    def build():
+        LY.write_zordered(li, data_p, cols, n_files=16)
+        ZM.build_zonemap(spark, data_p, zm_p, cols)
+
+    _ensure_index(data_p, li, (16, cols), build)
     out = ZM.zonemap_pruned_scan(
         spark, data_p, zm_p,
         {"l_partkey": (50.0, 150.0), "l_suppkey": (1.0, 8.0)},

@@ -201,10 +201,9 @@ def read_meta_counts(
 ) -> tuple[tuple[int, int, int, str], int]:
     """(geometry+key 4-tuple, registered distinct key count) in ONE
     meta read — the r15 count marker (VERDICT r14 ask #8): a caller
-    gating index freshness compares ``n_keys`` against its expected
-    source cardinality instead of re-counting keys/ per call, and
-    forwards the 4-tuple onward (``_meta``), so the whole gate costs
-    one 1-row read. ``n_keys`` is maintained by build (exact),
+    that needs the registered-key cardinality reads ``n_keys`` instead
+    of re-counting keys/, and forwards the 4-tuple onward (``_meta``).
+    ``n_keys`` is maintained by build (exact),
     ingest_bloom_batch (recounted from the registry after the append
     — self-healing under crash-replay) and compact (carried through:
     compaction never changes the key set)."""

@@ -89,14 +89,12 @@ def read_meta_stats(spark: SparkSession, path: str) -> tuple[int, int, int]:
     maintained by build/append (recounted from the committed doclen
     table after each append — recount, not increment, so crash-replay
     states self-heal on the next successful append) and carried through
-    compact (which never touches doclen). Callers gating freshness
-    compare ``n_docs`` against the expected source cardinality instead
-    of re-counting doclen per call, and the query path scores with the
-    meta stats instead of re-aggregating the corpus-sized doclen table
-    on every batch. The one crash window (doclen appended, meta rewrite
-    died) leaves stats stale-low; the gate law sees the mismatch and
-    rebuilds — never silently serves a half-updated meta (an absent or
-    torn meta is rejected loudly above)."""
+    compact (which never touches doclen). The query path scores with
+    the meta stats instead of re-aggregating the corpus-sized doclen
+    table on every batch. The one crash window (doclen appended, meta
+    rewrite died) leaves stats stale-low until the replayed append
+    recounts them — never a silently served half-updated meta (an
+    absent or torn meta is rejected loudly above)."""
     r = _read_meta_row(spark, path)
     return int(r["n_buckets"]), int(r["n_docs"]), int(r["sum_dl"])
 
@@ -182,8 +180,9 @@ def append_postings_index(
     a function of the SHARD, not the base — the append_ivf_table
     base-independence contract."""
     spark = shard.sparkSession
-    n_buckets = _read_meta(spark, path)
-    posts_p, doclen_p, _ = _paths(path)
+    meta = _read_meta_row(spark, path)
+    n_buckets = int(meta["n_buckets"])
+    posts_p, doclen_p, meta_p = _paths(path)
 
     from data_pengadaan_agent_spark.sources.catalog import spread
 
@@ -195,6 +194,11 @@ def append_postings_index(
     fresh = fresh.localCheckpoint(eager=True)
     n_new = fresh.count()
     if n_new == 0:
+        # a replay after a crash between the doclen commit and the meta
+        # rewrite: the shard is in, but the stats are stale — heal them
+        stats = _doclen_stats(spark, doclen_p)
+        if stats != (int(meta["n_docs"]), int(meta["sum_dl"])):
+            _write_meta(spark, meta_p, n_buckets, *stats)
         return 0
 
     toks = tokens(text_col)
@@ -223,10 +227,8 @@ def append_postings_index(
     # meta stats recommit LAST (recounted from the committed doclen —
     # recount, not increment, so a replayed or crashed append can never
     # double-count; a crash before this rewrite leaves stats stale-low,
-    # which the freshness-gate law catches as a mismatch → rebuild)
-    _, _, meta_p = _paths(path)
-    n_docs, sum_dl = _doclen_stats(spark, doclen_p)
-    _write_meta(spark, meta_p, n_buckets, n_docs, sum_dl)
+    # which the replayed append heals in its n_new == 0 branch)
+    _write_meta(spark, meta_p, n_buckets, *_doclen_stats(spark, doclen_p))
     return n_new
 
 

@@ -20,6 +20,11 @@ from data_pengadaan_agent_spark.sources.catalog import schema_head_echo
 
 INTERMEDIARY_VIEW = "intermediary_table"
 
+# view name -> the cached frame the view points to; holding the frame
+# itself lets a re-point unpersist exactly that cache entry (a lookup
+# through spark.table misses a stage-1 query that read the view itself)
+_cached_views: dict[str, DataFrame] = {}
+
 
 def materialize(
     df: DataFrame,
@@ -36,6 +41,15 @@ def materialize(
             df = df.withColumnRenamed(old, new)
     df = df.cache()
     df.createOrReplaceTempView(view_name)
+    previous = _cached_views.get(view_name)
+    _cached_views[view_name] = df
+    if (
+        previous is not None
+        and previous.sparkSession is df.sparkSession
+        and not previous.sameSemantics(df)  # a retry shares its cache entry
+    ):
+        # a new result that read the old view recomputes through lineage
+        previous.unpersist()
     if durable_path:
         df.write.mode("overwrite").parquet(durable_path)
     return schema_head_echo(df, echo_rows)
@@ -47,9 +61,7 @@ def read_intermediary(spark: SparkSession, view_name: str = INTERMEDIARY_VIEW) -
 
 
 def drop_intermediary(spark: SparkSession, view_name: str = INTERMEDIARY_VIEW) -> None:
-    try:
-        df = spark.table(view_name)
-        df.unpersist()
-    except Exception:
-        pass
+    previous = _cached_views.pop(view_name, None)
+    if previous is not None and previous.sparkSession is spark:
+        previous.unpersist()
     spark.catalog.dropTempView(view_name)

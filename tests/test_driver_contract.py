@@ -428,7 +428,7 @@ def test_round_audit_current_for_fixtures():
     FIXTURE by the margin probes in tools/audit_round_boundaries.py,
     so a fixture refresh without a fresh FULL audit run must fail
     loudly instead of silently carrying stale margins. The artifact
-    records a (size, mtime) fingerprint of the audited sf dir; this
+    records a (size, sha256) fingerprint of the audited sf dir; this
     pins artifact-vs-disk and rejects a partial (name-filtered) run
     as the standing artifact."""
     import json
@@ -457,6 +457,27 @@ def test_round_audit_current_for_fixtures():
         "boundary audit — re-run tools/audit_round_boundaries.py "
         "(the LUT/assignment margins are certified per fixture)"
     )
+
+
+def test_fixture_fingerprint_ignores_mtime_catches_content(tmp_path):
+    """The audit certificate survives a byte-identical redeploy (only
+    mtimes change) and is voided by any content edit."""
+    import os
+    import shutil
+
+    from tools.audit_round_boundaries import fixture_fingerprint
+
+    for fn in ("region.parquet", "nation.parquet"):
+        shutil.copy(os.path.join(SF_DIR, fn), tmp_path / fn)
+    before = fixture_fingerprint(str(tmp_path))
+    os.utime(tmp_path / "region.parquet", ns=(1, 1))
+    assert fixture_fingerprint(str(tmp_path)) == before
+    data = bytearray((tmp_path / "nation.parquet").read_bytes())
+    data[len(data) // 2] ^= 0xFF  # same size, different bytes
+    (tmp_path / "nation.parquet").write_bytes(bytes(data))
+    after = fixture_fingerprint(str(tmp_path))
+    assert after["region.parquet"] == before["region.parquet"]
+    assert after["nation.parquet"] != before["nation.parquet"]
 
 
 def test_bench_rerun_trigger_branches():

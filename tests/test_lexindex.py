@@ -135,6 +135,31 @@ def test_postings_meta_stats_marker(spark, tmp_path):
         LX.bm25_from_index(spark, path, _queries(spark))
 
 
+def test_replayed_append_heals_lost_meta_rewrite(spark, tmp_path, monkeypatch):
+    """Crash-replay: an append whose doclen and postings committed but
+    whose meta rewrite died leaves the stats stale-low; the replay finds
+    n_new == 0 and must still recommit the stats from doclen."""
+    docs = _mini_corpus(spark)
+    base = docs.filter(F.col("doc_id") <= 4)
+    shard = docs.filter(F.col("doc_id") >= 5)
+    path = str(tmp_path / "pidx")
+    LX.build_postings_index(base, path, n_buckets=8)
+    stale = LX.read_meta_stats(spark, path)
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before the meta rewrite")
+
+    with monkeypatch.context() as m:
+        m.setattr(LX, "_write_meta", crash)
+        with pytest.raises(RuntimeError, match="meta rewrite"):
+            LX.append_postings_index(shard, path)
+    assert LX.read_meta_stats(spark, path) == stale
+    assert LX.append_postings_index(shard, path) == 0
+    healed = LX.read_meta_stats(spark, path)
+    assert healed == (8, *LX._doclen_stats(spark, f"{path}/doclen"))
+    assert healed[1] == 6
+
+
 def test_postings_meta_is_commit_marker(spark, tmp_path):
     """No meta = no index: readers reject an uncommitted build (the
     crash-mid-build state) with a clear error, and bad build params

@@ -8,8 +8,9 @@ windows) or misses the single-partition pathology it exists for."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 from plan_audit import SCAN_THRESHOLD, audit_plan
 
@@ -90,3 +91,16 @@ def test_bnlj_not_rescued_by_distant_aggregate():
         f.startswith("CARTESIAN")
         for f in audit_plan(bnlj + filler + distant_agg)
     )
+
+
+def test_bnlj_buildleft_single_root_scans_whole_block():
+    """ADVICE: with BuildLeft and only one child root detected (here
+    the build child prints deeper than the stream child), the walker
+    took the last root's subtree — the stream side — and raised a
+    false CARTESIAN on an aggregate-bounded join."""
+    plan = (
+        "+- BroadcastNestedLoopJoin BuildLeft, Inner\n"
+        "   :     +- HashAggregate(keys=[], functions=[sum(v)])\n"
+        "   +- Scan parquet b"
+    )
+    assert audit_plan(plan) == []

@@ -109,6 +109,26 @@ def test_materialize_overwrite_contract(spark, tables):
     drop_intermediary(spark)
 
 
+def test_materialize_keeps_one_cached_entry(spark, tables):
+    """Re-pointing the view unpersists the frame it pointed to before,
+    so N materializes leave one cache entry; a stage-1 query that reads
+    the view itself stays correct through lineage."""
+    orders = tables["orders"]
+    key = F.col("o_orderkey")
+    frames = []
+    steps = (("base", 2), ("base", 3), ("view", 2), ("base", 5), ("base", 5))
+    for step, mod in steps:
+        src = orders if step == "base" else read_intermediary(spark)
+        frames.append(src.filter(key % mod == 0))
+        materialize(frames[-1])
+        want = 6 if step == "view" else mod  # the view held o_orderkey % 3 == 0
+        assert read_intermediary(spark).count() == orders.filter(key % want == 0).count()
+    # the verbatim retry (last step) shares the entry instead of dropping it
+    assert [f.storageLevel.useMemory for f in frames] == [False] * 3 + [True] * 2
+    drop_intermediary(spark)
+    assert not frames[-1].storageLevel.useMemory
+
+
 def test_catalog_ops(spark, tables):
     tables["region"].createOrReplaceTempView("region_v")
     assert "region_v" in list_tables(spark)

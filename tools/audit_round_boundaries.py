@@ -321,16 +321,21 @@ FROM fv f, cb c
 
 
 def fixture_fingerprint(sf_dir: str) -> dict[str, list]:
-    """(size, mtime_ns) of every fixture parquet — recorded into the
-    artifact so a FIXTURE change without a fresh audit run is loudly
-    detectable (ADVICE r10: the hash-exact LUT guarantee is certified
-    per fixture by measurement, so any data refresh must re-run the
-    probes; tests/test_driver_contract.py pins artifact-vs-disk)."""
+    """[size, sha256 of the bytes] of every fixture parquet — recorded
+    into the artifact so a FIXTURE change without a fresh audit run is
+    loudly detectable (ADVICE r10: the hash-exact LUT guarantee is
+    certified per fixture by measurement, so any data refresh must
+    re-run the probes; tests/test_driver_contract.py pins
+    artifact-vs-disk). Content-based, not mtime-based: a byte-identical
+    redeploy keeps the certificate, any content edit voids it."""
+    import hashlib
+
     out = {}
     for fn in sorted(os.listdir(sf_dir)):
         if fn.endswith(".parquet"):
-            st = os.stat(os.path.join(sf_dir, fn))
-            out[fn] = [st.st_size, st.st_mtime_ns]
+            with open(os.path.join(sf_dir, fn), "rb") as f:
+                data = f.read()
+            out[fn] = [len(data), hashlib.sha256(data).hexdigest()]
     return out
 
 

@@ -125,8 +125,11 @@ def audit_plan(plan: str) -> list[str]:
             # live — a stream-side aggregate never bounds the broadcast
             child_d = min(_depth(x) for x in kids)
             roots = [j for j, x in enumerate(kids) if _depth(x) == child_d]
-            if "BuildLeft" in line and len(roots) > 1:
-                build = "\n".join(kids[roots[0] : roots[1]])
+            if "BuildLeft" in line:
+                # one detected root (a collapsed or oddly indented
+                # child): the sides cannot be told apart, so scan the
+                # whole block rather than the last root's stream side
+                build = "\n".join(kids[roots[0] : roots[1]] if len(roots) > 1 else kids)
             else:
                 build = "\n".join(kids[roots[-1] :])
         else:
